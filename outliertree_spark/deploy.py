@@ -2,12 +2,15 @@
 
 Arrow UDF closures reference module functions by name, so Python workers
 must be able to import ``outliertree_spark``.  When the driver didn't launch
-via ``spark-submit --py-files``, we zip the package once per SparkContext
-and register it with ``addPyFile``.
+via ``spark-submit --py-files``, we zip the package once per process,
+register it with ``addPyFile`` once per SparkContext, and delete the zip
+when the interpreter exits (Spark keeps its own copy).
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import tempfile
 import zipfile
@@ -38,5 +41,11 @@ def ensure_package_on_executors(spark) -> None:
                     rel = os.path.join("outliertree_spark",
                                        os.path.relpath(full, pkg_dir))
                     zf.write(full, rel)
+        atexit.register(_remove, zpath)
     sc.addPyFile(zpath)
     setattr(sc, _ATTR, True)
+
+
+def _remove(path: str) -> None:
+    with contextlib.suppress(OSError):
+        os.remove(path)

@@ -643,8 +643,13 @@ class CheckpointLedger:
         return df.filter(~qcol(partition_col).isin(list(done)))
 
     def record_verdicts(self, verdicts: DataFrame, partition_col: str,
-                        lineage: dict | None = None) -> None:
-        for row in verdicts.collect():
+                        lineage: dict | None = None) -> list:
+        """Record one ledger line per verdict row and return the
+        collected rows, so a caller can summarise them without running
+        the verdicts plan again."""
+        rows = verdicts.collect()
+        for row in rows:
             d = row.asDict()
             part = d.pop(partition_col)
             self.record(part, d, lineage)
+        return rows

@@ -4,7 +4,6 @@ These re-express (not transliterate) the reference's gain / moment /
 threshold math so that flagged-row sets match its semantics:
 
 - sample SD with the ``SD_REG`` regularizer (reference src/split.cpp:74-101)
-- numeric gain = sd_tot - sum(n_i * sd_i) / n (src/split.cpp:103-117)
 - Shannon "total information" and categorical gain (src/split.cpp:119-213)
 - trimmed tail size, z-score, Chebyshev bound (src/outlier_tree.hpp:727-729,764)
 - central-half robust mean/SD and long-tail detection
@@ -52,11 +51,6 @@ def calc_sd_counts(cnt, s, ssq) -> float:
     if sd.ndim == 0:
         return float(sd)
     return sd
-
-
-def numeric_gain(tot_sd: float, info_left: float, info_right: float,
-                 info_na: float, cnt: float) -> float:
-    return float(LD(tot_sd) - (LD(info_left) + LD(info_right) + LD(info_na)) / LD(cnt))
 
 
 def total_info(counts: np.ndarray) -> float:

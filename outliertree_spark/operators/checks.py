@@ -55,7 +55,8 @@ def referential_orphans(child: DataFrame, parent: DataFrame,
 
 def snapshot_diff(old: DataFrame, new: DataFrame,
                   key_cols: list[str] | str,
-                  compare_cols: list[str] | None = None) -> DataFrame:
+                  compare_cols: list[str] | None = None,
+                  carry_cols: list[str] | None = None) -> DataFrame:
     """Row-level delta between two snapshots of the same table
     (north-rule: validation across ``warc_ts``-partitioned snapshot
     versions): one row per key whose state changed, with ``change_type``
@@ -77,13 +78,22 @@ def snapshot_diff(old: DataFrame, new: DataFrame,
     shape: each side reduces to (key, digest) in the scan — content
     bytes never shuffle — then ONE co-partitioned full-outer join on
     the key; on bucketed tables (sources/bucketed.py) the exchange
-    disappears entirely."""
+    disappears entirely.
+
+    ``carry_cols`` ride through the same join and are appended after
+    ``change_type`` (key columns among them are skipped, the key is
+    already in the output): an ``added`` or ``changed`` row
+    takes the value from ``new``, a ``removed`` row the one from
+    ``old``.  This attributes each delta row to, e.g., its partition
+    without joining the delta back to either snapshot."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     if compare_cols is None:
         shared = [c for c in old.columns if c in set(new.columns)]
         compare_cols = [c for c in shared if c not in set(keys)]
 
-    def _digest(df: DataFrame, alias: str) -> DataFrame:
+    carry = [c for c in carry_cols or [] if c not in keys]
+
+    def _digest(df: DataFrame, side: str) -> DataFrame:
         def _enc(c):
             s = qcol(c).cast("string")
             return F.coalesce(
@@ -91,16 +101,21 @@ def snapshot_diff(old: DataFrame, new: DataFrame,
                 F.lit("N"))
         parts = [_enc(c) for c in compare_cols]
         return df.select(*[qcol(k).alias(k) for k in keys],
-                         F.md5(F.concat(*parts)).alias(alias))
+                         F.md5(F.concat(*parts)).alias(f"_h_{side}"),
+                         *[qcol(c).alias(f"_c_{side}{i}")
+                           for i, c in enumerate(carry)])
 
-    j = _digest(old, "_h_old").join(_digest(new, "_h_new"), keys,
-                                    "full_outer")
+    j = _digest(old, "old").join(_digest(new, "new"), keys, "full_outer")
     change = (F.when(F.col("_h_old").isNull(), "added")
                .when(F.col("_h_new").isNull(), "removed")
                .when(F.col("_h_old") != F.col("_h_new"), "changed"))
+    in_new = F.col("_h_new").isNotNull()
     return (j.withColumn("change_type", change)
              .filter(F.col("change_type").isNotNull())
-             .select(*[qcol(k) for k in keys], "change_type"))
+             .select(*[qcol(k) for k in keys], "change_type",
+                     *[F.when(in_new, F.col(f"_c_new{i}"))
+                        .otherwise(F.col(f"_c_old{i}")).alias(c)
+                       for i, c in enumerate(carry)]))
 
 
 def _histogram(df: DataFrame, col: str, bucket_expr=None) -> DataFrame:

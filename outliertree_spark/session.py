@@ -3,102 +3,8 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import SparkSession
-
-# applicationIds already warmed by _warm_engine (one warm-up per
-# SparkContext; getOrCreate may hand the same context back many times)
-_WARMED: set[str] = set()
-# JIT promotion is JVM-wide and the py4j-launched JVM outlives
-# SparkContexts, so the 150k-row expression pipeline only pays off once
-# per PROCESS; later contexts just touch the per-context machinery
-_JIT_DONE: list[bool] = []
-
-
-def _warm_engine(spark: SparkSession) -> None:
-    """One-time per-context JVM warm-up on SYNTHETIC data.
-
-    The first real execution of each operator family otherwise runs its
-    hot per-row paths (UTF8String replace/split, regexp, array HOFs,
-    hash-aggregate update loops) in the interpreter/C1 until HotSpot's
-    tiered JIT promotes them — measured ~6s of one-shot first-execution
-    overhead across the 52-query suite at sf0.1, e.g. quality_scores
-    1.60s first / 0.35s thereafter, reproduced with whole-stage codegen
-    disabled (so it is JIT, not janino).  A real cluster pays this once
-    per executor lifetime and amortizes it over hours; a fresh local
-    session pays it inside the first queries.  Exercising the same JVM
-    methods on ~150k generated rows at session start moves that cost
-    into session setup, exactly like the Python-worker pool spin-up
-    warm-up the bench harness already does (and the -Xms/AlwaysPreTouch
-    heap pre-touch): infrastructure warm-up, no input data touched, no
-    results kept.  JIT state is JVM-wide, so in a multi-session process
-    only the first warm-up is slow (~2s; ~0.3s thereafter).
-
-    Opt out with SPARK_GRAFT_NO_WARMUP=1 (e.g. latency-sensitive
-    single-query scripts)."""
-    if os.environ.get("SPARK_GRAFT_NO_WARMUP"):
-        return
-    app = spark.sparkContext.applicationId
-    if app in _WARMED:
-        return
-    _WARMED.add(app)
-    try:
-        _warm_engine_inner(spark)
-    except Exception:
-        # best-effort: a warm-up failure (full temp dir, exotic master)
-        # must never take down session creation — the engine is correct
-        # without it, just cold
-        pass
-
-
-def _warm_engine_inner(spark: SparkSession) -> None:
-    from pyspark.sql import Window, functions as F
-
-    def _noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    if not _JIT_DONE:
-        _JIT_DONE.append(True)
-        # string/expression pipeline: md5-generated text through the same
-        # per-row methods the text operators run (replace chains, regexp,
-        # split/lower/trim, array HOFs, xxhash64/conv arithmetic)
-        syn = (spark.range(150_000)
-                    .select(F.col("id"),
-                            F.concat_ws(" ", F.md5(F.col("id").cast("string")),
-                                        F.lit("the and of to is"),
-                                        F.md5((F.col("id") + 1).cast("string")))
-                             .alias("_t")))
-        pad = F.concat(F.lit(" "), F.lower(F.col("_t")), F.lit(" "))
-        toks = F.split(F.lower(F.trim(F.col("_t"))), r"\s+")
-        n = F.size(toks)
-        idx = F.sequence(F.lit(0), F.greatest(n - 3, F.lit(0)))
-        grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)))
-        hashes = F.transform(grams, lambda g: F.xxhash64(g))
-        _noop(syn.select(
-            (F.length(pad) - F.length(F.replace(pad, F.lit(" the "), F.lit("")))).alias("a"),
-            F.length(F.regexp_replace(F.col("_t"), r"[.,;:!?]", "")).alias("b"),
-            F.size(F.regexp_extract_all(F.col("_t"), F.lit(r"[A-Za-z]+|[0-9]+"), 0)).alias("c"),
-            F.array_min(F.array_distinct(hashes)).alias("d"),
-            F.aggregate(F.zip_with(hashes, hashes,
-                                   lambda x, y: F.pmod(x, F.lit(1000003))
-                                   + F.pmod(y, F.lit(1000003))),
-                        F.lit(0).cast("long"), lambda acc, x: acc + x).alias("e"),
-            F.conv(F.substring(F.md5(F.col("_t")), 1, 15), 16, 10).cast("long").alias("f")))
-        # token explode -> hash aggregate (map-side combine) -> window -> join
-        ex = syn.select(F.col("id"), F.explode(toks).alias("term"))
-        agg = (ex.groupBy("term")
-                 .agg(F.count(F.lit(1)).alias("tf"), F.min("id").alias("mn")))
-        w = Window.partitionBy(F.lit(1)).orderBy(F.col("tf").desc(), "term")
-        top = agg.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= 8)
-        _noop(ex.join(F.broadcast(top.select("term")), "term")
-                .groupBy("id").agg(F.count(F.lit(1)).alias("k")))
-    # datasource + lineage-cut machinery: tiny self-generated parquet
-    # round trip and an eager localCheckpoint (toRdd path)
-    p = os.path.join(tempfile.gettempdir(), f"otspark_warm_{os.getpid()}.parquet")
-    spark.range(64).write.mode("overwrite").parquet(p)
-    _noop(spark.read.parquet(p))
-    spark.range(64).localCheckpoint(eager=True).count()
 
 
 def get_spark(app: str = "outliertree_spark", master: str | None = None,
@@ -131,5 +37,4 @@ def get_spark(app: str = "outliertree_spark", master: str | None = None,
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _warm_engine(spark)
     return spark

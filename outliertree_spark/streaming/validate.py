@@ -2,7 +2,7 @@
 
 The reference is batch-only; this applies the broadcast fitted model to a
 stream: violations via the same Arrow batch routing inside foreachBatch /
-mapInPandas, plus watermarked windowed verdict aggregation for late data.
+mapInPandas.
 Smoke-tested with the file source + memory sink (synchronous
 ``processAllAvailable``), which is the standard local harness.
 """
@@ -28,23 +28,6 @@ def stream_violations_at_scale(engine, stream_df: DataFrame,
     through Python workers.  Same rows as `stream_violations`
     (equivalence-tested batch-side)."""
     return engine.predict_at_scale(stream_df, id_cols=id_cols)
-
-
-def windowed_verdicts(engine, stream_df: DataFrame, ts_col: str,
-                      window: str = "5 minutes",
-                      watermark: str = "10 minutes",
-                      id_cols: list[str] | None = None) -> DataFrame:
-    """Per-event-time-window violation counts with a watermark for late
-    rows.  Join-free: violations carry the timestamp through predict."""
-    id_cols = list(dict.fromkeys([ts_col] + (id_cols or [])))
-    viols = engine.predict(stream_df, id_cols=id_cols)
-    return (viols
-            .withWatermark(ts_col, watermark)
-            .groupBy(F.window(F.col(ts_col), window).alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_violations"))
-            .select(F.col("w.start").alias("window_start"),
-                    F.col("w.end").alias("window_end"),
-                    "n_violations"))
 
 
 def stateful_drift_monitor(stream_df: DataFrame, key_col: str, cat_col: str,

@@ -21,6 +21,7 @@ import json
 import os
 import sys
 import time
+from collections import Counter
 
 # local-run fallback; under spark-submit the package arrives via --py-files
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -55,25 +56,19 @@ def _snapshot_check(spark, ledger, args, df_full) -> bool:
                          "or --id-col")
     idc = list(dict.fromkeys(
         [args.partition_col] + ([args.id_col] if args.id_col else [])))
-    d = snapshot_diff(prev, df_full, [key])
-
-    def _shape(src, ct):
-        rows = src.join(d.filter(F.col("change_type") == ct),
-                        [key], "inner")
-        return rows.select(
-            *idc,
-            F.lit("snapshot_delta").alias("suspicious_column"),
-            F.col("change_type").alias("suspicious_value"),
-            F.lit(None).cast("double").alias("suspicious_value_num"),
-            F.lit(None).cast("string").alias("group_statistics"),
-            F.lit(None).cast("string").alias("conditions"),
-            F.lit(None).cast("long").alias("tree_depth"),
-            F.lit(None).cast("boolean").alias("uses_NA_branch"),
-            F.lit(None).cast("double").alias("outlier_score"),
-            F.concat(F.lit("row "), F.col("change_type"),
-                     F.lit(" vs previous snapshot")).alias("explanation"))
-
-    snap = _shape(df_full, "changed").unionByName(_shape(prev, "removed"))
+    d = snapshot_diff(prev, df_full, [key], carry_cols=idc)
+    snap = d.filter(F.col("change_type") != "added").select(
+        *idc,
+        F.lit("snapshot_delta").alias("suspicious_column"),
+        F.col("change_type").alias("suspicious_value"),
+        F.lit(None).cast("double").alias("suspicious_value_num"),
+        F.lit(None).cast("string").alias("group_statistics"),
+        F.lit(None).cast("string").alias("conditions"),
+        F.lit(None).cast("long").alias("tree_depth"),
+        F.lit(None).cast("boolean").alias("uses_NA_branch"),
+        F.lit(None).cast("double").alias("outlier_score"),
+        F.concat(F.lit("row "), F.col("change_type"),
+                 F.lit(" vs previous snapshot")).alias("explanation"))
     snap.write.mode("append").parquet(args.violations_out)
     ledger.record_marker(marker, {"violations_out": args.violations_out})
     return True
@@ -122,7 +117,9 @@ def main(argv=None) -> int:
     from outliertree_spark import CheckpointLedger, SparkOutlierTree, ValidationConfig
     from outliertree_spark.session import get_spark
 
+    t_session = time.time()
     spark = get_spark(app="validate-run", master=args.master)
+    session_start_sec = round(time.time() - t_session, 2)
     df = (spark.table(args.input) if not args.input.endswith(".parquet")
           and "/" not in args.input else spark.read.parquet(args.input))
 
@@ -203,14 +200,16 @@ def main(argv=None) -> int:
 
     _snapshot_check(spark, ledger, args, df_full)
 
-    ledger.record_verdicts(verdicts, args.partition_col,
-                           lineage={"input": args.input,
-                                    "model": args.model_out or args.model_in,
-                                    "wall_sec": round(time.time() - t0, 2)})
-    summary = verdicts.groupBy("passed").count().collect()
+    rows = ledger.record_verdicts(
+        verdicts, args.partition_col,
+        lineage={"input": args.input,
+                 "model": args.model_out or args.model_in,
+                 "wall_sec": round(time.time() - t0, 2),
+                 "session_start_sec": session_start_sec})
     print(json.dumps({"status": "ok",
-                      "verdicts": {str(r["passed"]): r["count"] for r in summary},
-                      "wall_sec": round(time.time() - t0, 2)}))
+                      "verdicts": Counter(str(r["passed"]) for r in rows),
+                      "wall_sec": round(time.time() - t0, 2),
+                      "session_start_sec": session_start_sec}))
     spark.stop()
     return 0
 

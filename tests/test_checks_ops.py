@@ -401,3 +401,26 @@ def test_snapshot_diff_dotted_and_subset_cols(spark):
     got = {r["id.key"]: r["change_type"]
            for r in snapshot_diff(old, new, "id.key", ["val.a"]).collect()}
     assert got == {2: "changed"}
+
+
+def test_snapshot_diff_carry_cols(spark):
+    """carry_cols ride through the one full-outer join: added and
+    changed rows take the new snapshot's value, removed rows the old
+    one's; a carried key column is not duplicated, and without
+    carry_cols the output keeps its two columns."""
+    from outliertree_spark.operators.checks import snapshot_diff
+    old = spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 0), (3, "c", 1), (6, None, 2)],
+        "k long, text string, part long")
+    new = spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 5), (4, "d", 3), (6, "x", None)],
+        "k long, text string, part long")
+    d = snapshot_diff(old, new, "k", carry_cols=["part", "k"])
+    assert d.columns == ["k", "change_type", "part"]
+    got = {r["k"]: (r["change_type"], r["part"]) for r in d.collect()}
+    # 2 moved partition 0 -> 5 (changed, current partition); 3 removed
+    # (previous partition); 4 added; 6 changed to a NULL partition,
+    # which is carried as NULL, not filled from the old side
+    assert got == {2: ("changed", 5), 3: ("removed", 1), 4: ("added", 3),
+                   6: ("changed", None)}
+    assert snapshot_diff(old, new, "k").columns == ["k", "change_type"]

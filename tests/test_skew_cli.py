@@ -1,8 +1,10 @@
 """Skew utilities + the spark-submit CLI driven end-to-end (incl. resume)."""
 
 import json
+import os
 import subprocess
 import sys
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -63,20 +65,35 @@ def test_cli_run_and_resume(spark, tmp_path):
            "--id-col", "doc_id", "--checkpoint", ledger,
            "--violations-out", vout, "--model-out", model,
            "--master", "local[2]"]
+    # the CLI's own temp files go to TMPDIR; it must leave none behind
+    tmp = tmp_path / "tmpdir"
+    tmp.mkdir()
+    env = dict(os.environ, TMPDIR=str(tmp))
     r = subprocess.run(cmd, capture_output=True, text=True, timeout=420,
-                       cwd=".")
+                       cwd=".", env=env)
     assert r.returncode == 0, r.stderr[-2000:]
     out = json.loads(r.stdout.strip().splitlines()[-1])
     assert out["status"] == "ok"
+    assert out["session_start_sec"] > 0 and out["wall_sec"] > 0
+    # the stdout summary is built from the verdict rows the ledger
+    # recorded, so the two agree
+    entries = [json.loads(line) for line in open(ledger)]
+    passed = Counter(str(e["verdict"]["passed"]) for e in entries)
+    assert out["verdicts"] == dict(passed)
+    assert sum(passed.values()) == 4
+    assert all(e["lineage"]["session_start_sec"] > 0 for e in entries)
 
     viols = spark.read.parquet(vout).toPandas()
     assert 9 in set(viols["doc_id"])
     # resume: everything done -> nothing-to-do
     r2 = subprocess.run(cmd + ["--resume", "--model-in", model],
-                        capture_output=True, text=True, timeout=420, cwd=".")
+                        capture_output=True, text=True, timeout=420, cwd=".",
+                        env=env)
     assert r2.returncode == 0, r2.stderr[-2000:]
     out2 = json.loads(r2.stdout.strip().splitlines()[-1])
     assert out2["status"] == "nothing-to-do" and out2["done"] == 4
+    assert not list(tmp.glob("outliertree_spark_*.zip"))
+    assert not list(tmp.glob("otspark_warm_*"))
 
 
 def test_domain_profile_plan_has_no_single_partition(spark):
@@ -181,6 +198,8 @@ def test_cli_prev_snapshot(spark, tmp_path):
     # previous snapshot: doc 42's content differed; doc 5000 existed then
     ppdf = pdf.copy()
     ppdf.loc[42, "text_len"] = 1.0
+    # doc 43 moved from bucket 2 to bucket 1 since the previous snapshot
+    ppdf.loc[43, "bucket"] = 2
     extra = pdf.iloc[[0]].copy()
     extra["doc_id"] = 5000
     ppdf = pd.concat([ppdf, extra], ignore_index=True)
@@ -199,9 +218,13 @@ def test_cli_prev_snapshot(spark, tmp_path):
     viols = spark.read.parquet(vout).toPandas()
     snap = viols[viols["suspicious_column"] == "snapshot_delta"]
     got = dict(zip(snap["doc_id"], snap["suspicious_value"]))
-    assert got == {42: "changed", 5000: "removed"}
-    # removed row attributed to its partition in the previous snapshot
-    assert set(snap[snap["doc_id"] == 5000]["bucket"]) == {0}
+    assert got == {42: "changed", 43: "changed", 5000: "removed"}
+    assert len(snap) == 3
+    # changed rows are attributed to their current partition, the removed
+    # row to its partition in the previous snapshot
+    assert list(snap[snap["doc_id"] == 43]["bucket"]) == [1]
+    assert list(snap[snap["doc_id"] == 42]["bucket"]) == [0]
+    assert list(snap[snap["doc_id"] == 5000]["bucket"]) == [0]
 
 
 def test_cli_prev_snapshot_with_resume(spark, tmp_path):
