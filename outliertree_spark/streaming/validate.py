@@ -19,17 +19,6 @@ def stream_violations(engine, stream_df: DataFrame,
     return engine.predict(stream_df, id_cols=id_cols)
 
 
-def stream_violations_at_scale(engine, stream_df: DataFrame,
-                               id_cols: list[str] | None = None) -> DataFrame:
-    """Violation stream with ZERO Python in the streaming plan:
-    `engine.predict_at_scale` is a stateless project/filter plus a
-    stream-static BROADCAST join against the per-cluster dimension — all
-    whole-stage codegen, so the micro-batch path never round-trips
-    through Python workers.  Same rows as `stream_violations`
-    (equivalence-tested batch-side)."""
-    return engine.predict_at_scale(stream_df, id_cols=id_cols)
-
-
 def stateful_drift_monitor(stream_df: DataFrame, key_col: str, cat_col: str,
                            baseline: dict[str, float],
                            eps: float = 1e-6) -> DataFrame:

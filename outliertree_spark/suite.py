@@ -25,7 +25,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, functions as F
 
 from .config import ValidationConfig
-from .engine import SparkOutlierTree
+from .engine import SparkOutlierTree, partition_verdicts
 from .operators import checks as C
 
 
@@ -215,19 +215,13 @@ class ValidationSuite:
 
     def run(self, df: DataFrame, partition_col: str,
             id_cols: list[str] | None = None,
-            max_violation_rate: float | None = None,
-            at_scale: bool = False) -> tuple[DataFrame, DataFrame]:
-        """``at_scale=True`` routes the derived (tree) violations through
-        `engine.predict_at_scale` — the whole suite then contains no
-        Python operator (declared checks are already pure Catalyst)."""
+            max_violation_rate: float | None = None) -> tuple[DataFrame, DataFrame]:
         id_cols = list(dict.fromkeys([partition_col] + (id_cols or [])))
         rate = (max_violation_rate if max_violation_rate is not None
                 else self.engine.config.pct_outliers)
 
-        predict = (self.engine.predict_at_scale if at_scale
-                   else self.engine.predict)
         # derived (tree) violations
-        derived = (predict(df, id_cols=id_cols)
+        derived = (self.engine.predict(df, id_cols=id_cols)
                    .select(*id_cols, "suspicious_column",
                            F.col("suspicious_value").alias("check_value"),
                            "outlier_score", "explanation")
@@ -246,16 +240,7 @@ class ValidationSuite:
         for p in parts[1:]:
             viols = viols.unionByName(p)
 
-        totals = df.groupBy(partition_col).agg(F.count(F.lit(1)).alias("n_rows"))
-        vcnt = viols.groupBy(partition_col).agg(
-            F.count(F.lit(1)).alias("n_violations"))
-        verdicts = (totals.join(vcnt, partition_col, "left")
-                    .withColumn("n_violations",
-                                F.coalesce("n_violations", F.lit(0)))
-                    .withColumn("violation_rate",
-                                F.col("n_violations") / F.col("n_rows"))
-                    .withColumn("passed",
-                                F.col("violation_rate") <= F.lit(rate)))
+        verdicts = partition_verdicts(df, viols, partition_col, rate)
 
         # drift checks gate whole partitions: one grouped-histogram pass per
         # check (no per-partition jobs -- scales to any partition count)

@@ -48,6 +48,7 @@ def _snapshot_check(spark, ledger, args, df_full) -> bool:
 
     from pyspark.sql import functions as F
 
+    from outliertree_spark.engine import violation_select
     from outliertree_spark.operators.checks import snapshot_diff
     prev = spark.read.parquet(args.prev_snapshot)
     key = args.snapshot_key or args.id_col
@@ -57,18 +58,12 @@ def _snapshot_check(spark, ledger, args, df_full) -> bool:
     idc = list(dict.fromkeys(
         [args.partition_col] + ([args.id_col] if args.id_col else [])))
     d = snapshot_diff(prev, df_full, [key], carry_cols=idc)
-    snap = d.filter(F.col("change_type") != "added").select(
-        *idc,
-        F.lit("snapshot_delta").alias("suspicious_column"),
-        F.col("change_type").alias("suspicious_value"),
-        F.lit(None).cast("double").alias("suspicious_value_num"),
-        F.lit(None).cast("string").alias("group_statistics"),
-        F.lit(None).cast("string").alias("conditions"),
-        F.lit(None).cast("long").alias("tree_depth"),
-        F.lit(None).cast("boolean").alias("uses_NA_branch"),
-        F.lit(None).cast("double").alias("outlier_score"),
-        F.concat(F.lit("row "), F.col("change_type"),
-                 F.lit(" vs previous snapshot")).alias("explanation"))
+    snap = violation_select(
+        d.filter(F.col("change_type") != "added"), idc,
+        suspicious_column=F.lit("snapshot_delta"),
+        suspicious_value=F.col("change_type"),
+        explanation=F.concat(F.lit("row "), F.col("change_type"),
+                             F.lit(" vs previous snapshot")))
     snap.write.mode("append").parquet(args.violations_out)
     ledger.record_marker(marker, {"violations_out": args.violations_out})
     return True
@@ -176,21 +171,19 @@ def main(argv=None) -> int:
         # without mergeSchema.  The check name + failed-rule list land
         # in suspicious_value/explanation.
         from pyspark.sql import functions as F
+
+        from outliertree_spark.engine import violation_select
         idc = list(dict.fromkeys(
             [args.partition_col] + ([args.id_col] if args.id_col else [])))
-        viols = viols.select(
-            *idc, "suspicious_column",
-            F.col("check_value").alias("suspicious_value"),
-            F.lit(None).cast("double").alias("suspicious_value_num"),
-            F.lit(None).cast("string").alias("group_statistics"),
-            F.lit(None).cast("string").alias("conditions"),
-            F.lit(None).cast("long").alias("tree_depth"),
-            F.lit(None).cast("boolean").alias("uses_NA_branch"),
-            "outlier_score",
-            F.coalesce("explanation",
-                       F.concat(F.lit("check ["), F.col("check"),
-                                F.lit("] failed: "),
-                                F.col("check_value"))).alias("explanation"))
+        viols = violation_select(
+            viols, idc,
+            suspicious_column=F.col("suspicious_column"),
+            suspicious_value=F.col("check_value"),
+            outlier_score=F.col("outlier_score"),
+            explanation=F.coalesce(
+                "explanation",
+                F.concat(F.lit("check ["), F.col("check"),
+                         F.lit("] failed: "), F.col("check_value"))))
     else:
         viols, verdicts = eng.validate(
             df, partition_col=args.partition_col,

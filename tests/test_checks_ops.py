@@ -189,6 +189,9 @@ def test_streaming_validation(spark, tmp_path):
     run_stream_to_memory(v, "viol_stream")
     got = spark.sql("SELECT * FROM viol_stream").toPandas()
     assert 5 in set(got["event_id"])
+    row = got[got.event_id == 5].iloc[0]
+    assert row["suspicious_column"] == "value"
+    assert "880000000" in row["explanation"], row["explanation"]
 
 
 def test_stateful_drift_monitor(spark, tmp_path):

@@ -180,6 +180,7 @@ def test_timestamp_column_support(spark):
     ts = base + pd.to_timedelta(rng.randint(0, 30 * 24 * 3600, size=n), unit="s")
     ts = pd.Series(ts)
     ts.iloc[3] = base + pd.Timedelta(days=900)  # way outside the window
+    ts.iloc[4] = base - pd.Timedelta(days=900)  # way before it
     pdf = pd.DataFrame({"id": np.arange(n),
                         "warc_ts": ts.dt.tz_localize(None),
                         "x": rng.normal(size=n)})
@@ -187,6 +188,34 @@ def test_timestamp_column_support(spark):
     eng = SparkOutlierTree(ValidationConfig())
     eng.fit(df, id_cols=["id"])
     viols = eng.predict(df, id_cols=["id"]).toPandas()
-    assert 3 in set(viols["id"])
+    assert {3, 4} <= set(viols["id"])
     row = viols[viols.id == 3].iloc[0]
     assert row["suspicious_column"] == "warc_ts"
+    assert viols[viols.id == 4].iloc[0]["suspicious_column"] == "warc_ts"
+    # the explanation shows the flagged value as its UTC date
+    assert "2026-06-19" in row["explanation"], row["explanation"]
+
+
+def test_worker_model_reparses_changed_json():
+    """A reused Python worker must not apply a cached model to a different
+    broadcast JSON, even one of equal length whose head and tail match."""
+    import json
+    from types import SimpleNamespace
+
+    from outliertree_spark.engine import _worker_model
+
+    def model_json(upper_lim):
+        return json.dumps({"head": "h" * 300,
+                           "columns": [{"clusters": [{"upper_lim": upper_lim}]}],
+                           "tail": "t" * 300})
+
+    def worker_model(s):
+        return _worker_model(SimpleNamespace(value=s))
+
+    a, b = model_json(1.25), model_json(9.75)
+    assert len(a) == len(b) and a[:256] == b[:256] and a[-256:] == b[-256:]
+    assert worker_model(a)["columns"][0]["clusters"][0]["upper_lim"] == 1.25
+    m = worker_model(b)
+    assert m["columns"][0]["clusters"][0]["upper_lim"] == 9.75
+    # an equal text keeps the parsed model (and its render cache)
+    assert worker_model(model_json(9.75)) is m
