@@ -3,8 +3,11 @@
 Architecture (SURVEY.md section 7): the conditioning-tree fit runs once on
 a bounded deterministic sample collected to the driver (the reference is a
 single-node in-memory fit; our fit sample is capped by
-``config.max_fit_rows``), the fitted constraint structs are broadcast as
-compact dicts, and the *validate* path scales out: a flaggable-bounds
+``config.max_fit_rows``).  As in the reference, independent target
+columns are fitted one per thread; the numeric targets run as one chain
+in column order, for the reference's stale-flag hand-off.  The fitted
+constraint structs are broadcast as compact dicts, and the *validate*
+path scales out: a flaggable-bounds
 pre-filter expressed as Catalyst predicates (pushed down to the scan) plus
 one Arrow-vectorized ``mapInPandas`` pass for tree routing.  No per-row
 Python anywhere: batches are NumPy masks end to end.
@@ -260,13 +263,16 @@ class SparkOutlierTree:
         sdf = df.select(*[qcol(c) for c in
                           dict.fromkeys(keep_ids + fit_names)])
         # Bounded fit sample, one action on the common path: probe with
-        # limit(max_fit_rows + 1) — CollectLimit executes incrementally
-        # (first partition, then 4x more per round), so when the input
-        # fits the cap this single early-exit job IS the whole fit read
-        # (the old shape always ran a separate count job first).  Only
-        # when the probe overflows (input larger than the cap) does the
-        # scale path run the count + seeded Bernoulli sample — and that
-        # probe cost max_fit_rows+1 rows, not a scan.  A top-k-by-hash
+        # limit(max_fit_rows + 1).  The Arrow toPandas path executes the
+        # CollectLimit as one job of two stages: every scan task keeps up
+        # to max_fit_rows + 1 rows (a per-partition local limit), and all
+        # of them are shuffled into one single-partition task that applies
+        # the global limit.  It is not incremental: the scan stage reads
+        # every partition.  When the input fits the cap this one job IS
+        # the whole fit read (a count job before the collect measured no
+        # faster cold).  Only when the probe overflows (input larger than
+        # the cap) does the scale path run the count + seeded Bernoulli
+        # sample.  A top-k-by-hash
         # one-pass sample was considered instead and rejected:
         # TakeOrderedAndProject merges per-partition top-k on the
         # driver, which is partitions x max_fit_rows rows at 100 TB.

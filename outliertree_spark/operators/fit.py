@@ -8,12 +8,20 @@ deterministic sample, calls :func:`fit_arrays`, and broadcasts the
 resulting plain-dict model; the *validate* path is what scales out.
 
 Column order convention matches the reference: numeric, categorical,
-ordinal (fit_model.cpp:148).
+ordinal (fit_model.cpp:148).  As the reference fits one column per
+OpenMP thread, :func:`fit_arrays` fits one target per thread: each
+categorical or ordinal target is its own task, and the numeric targets
+run as one chain in column order, because each starts from the stale
+``has_outliers`` its predecessor left (``_ColumnFit.__init__``).  Model
+assembly and the per-row winner merge then run in column order, so the
+model does not depend on the thread count.
 """
 
 from __future__ import annotations
 
 import math
+import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import numpy as np
@@ -105,6 +113,8 @@ class _FitContext:
         self.prop_small: dict[str, np.ndarray] = {}
         self.prior: dict[str, np.ndarray] = {}
         self.decimals: dict[str, int] = {}
+        # stable argsort of each numeric predictor, shared by every target
+        self.x_order: dict[str, np.ndarray] = {}
 
         min_cond = min(cfg.min_size_numeric, cfg.min_size_categ)
         for c in self.numeric:
@@ -116,6 +126,7 @@ class _FitContext:
                 self.skip_col[c.name] = True
             else:
                 self.skip_col[c.name] = False
+                self.x_order[c.name] = np.argsort(v, kind="stable")
             self.decimals[c.name] = self._col_decimals(good)
         for c in self.categ + self.ordinal:
             codes = c.values
@@ -356,7 +367,8 @@ class _ColumnFit:
                 continue
             if kind == "numeric":
                 res = split_numericx_numericy(ix, pred.values, self.y, sd_y,
-                                              cfg.min_size_numeric, cfg.take_mid)
+                                              cfg.min_size_numeric, cfg.take_mid,
+                                              self.ctx.x_order[pred.name])
             elif kind == "categorical":
                 res = split_categx_numericy(ix, pred.values, self.y, sd_y, mean_y,
                                             False, len(pred.levels),
@@ -635,7 +647,7 @@ class _ColumnFit:
             if kind == "numeric":
                 res = split_numericx_categy(ix, pred.values, self.codes, ncat,
                                             base_info_orig, cfg.min_size_categ,
-                                            cfg.take_mid)
+                                            cfg.take_mid, self.ctx.x_order[pred.name])
             elif kind == "categorical":
                 ncat_x = len(pred.levels)
                 if self.col_is_bin:
@@ -898,6 +910,45 @@ def _simplify_cluster_conditions(clusters: list[dict], levels: dict[str, list]) 
                 cl["split_type"] = "eq" if cl["split_type"] == "gt" else "neq"
 
 
+def _fit_numeric_chain(ctx: _FitContext) -> list[_ColumnFit | None]:
+    """Fit the numeric targets one after another in column order, each
+    starting from the stale ``has_outliers`` the previous one left (see
+    ``_ColumnFit.__init__``); None for a skipped column."""
+    fitted: list[_ColumnFit | None] = []
+    stale_has_outliers = False
+    for col in ctx.numeric:
+        if ctx.skip_col.get(col.name):
+            fitted.append(None)
+            continue
+        w = _ColumnFit(ctx, col, stale_has_outliers)
+        w.fit_numeric()
+        stale_has_outliers = w.has_outliers
+        fitted.append(w)
+    return fitted
+
+
+def _fit_categ_target(ctx: _FitContext, col: FitColumn) -> _ColumnFit:
+    # a categorical or ordinal fit assigns has_outliers before reading it,
+    # so it does not depend on the column fitted before it
+    w = _ColumnFit(ctx, col)
+    w.fit_categ(is_ord=(col.kind == "ordinal"))
+    return w
+
+
+def _fit_targets(ctx: _FitContext) -> list[_ColumnFit | None]:
+    """One workspace per column of ``ctx.columns`` (None if skipped),
+    fitted concurrently as the reference does (fit_model.cpp:285-286):
+    the numeric chain is one task, every categorical or ordinal target
+    another.  NumPy's sorts, scans, gathers and reductions release the
+    GIL, so threads suffice."""
+    categ = ctx.categ + ctx.ordinal
+    workers = min(len(os.sched_getaffinity(0)), 1 + len(categ))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        chain = pool.submit(_fit_numeric_chain, ctx)
+        rest = [pool.submit(_fit_categ_target, ctx, c) for c in categ]
+        return chain.result() + [f.result() for f in rest]
+
+
 def fit_arrays(columns: list[FitColumn], cfg: ValidationConfig) -> dict:
     """Fit the full model over in-memory columns; returns a plain-dict,
     JSON-serializable model ready to broadcast."""
@@ -916,18 +967,9 @@ def fit_arrays(columns: list[FitColumn], cfg: ValidationConfig) -> dict:
     }
 
     col_models = []
-    stale_has_outliers = False
-    for col_ix, col in enumerate(ctx.columns):
-        w = _ColumnFit(ctx, col, stale_has_outliers)
-        if col.kind == "numeric":
-            if ctx.skip_col.get(col.name):
-                continue
-            w.fit_numeric()
-        else:
-            w.fit_categ(is_ord=(col.kind == "ordinal"))
-        stale_has_outliers = w.has_outliers
-
-        if not w.clusters or not w.trees or _tree_not_needed(w.trees[0]):
+    for col, w in zip(ctx.columns, _fit_targets(ctx)):
+        if w is None or not w.clusters or not w.trees \
+                or _tree_not_needed(w.trees[0]):
             continue
         _simplify_cluster_conditions(w.clusters, levels_by_col)
 

@@ -48,8 +48,25 @@ def _nsd_prefix(y: np.ndarray) -> np.ndarray:
     return k * sd
 
 
+def _sorted_by_x(rest: np.ndarray, x: np.ndarray,
+                 x_order: np.ndarray | None) -> np.ndarray:
+    """``rest`` (rows with a non-NA ``x``) ordered by ``x``, ties kept in
+    ``rest``'s order, as a stable argsort of ``x[rest]`` gives.
+    ``x_order`` is a stable argsort of all of ``x``: when ``rest`` is in
+    ascending row order, the same order is ``x_order`` filtered to
+    ``rest``, with no sort.  The filter makes a few passes over all of
+    ``x``, so it is used only when ``rest`` holds at least 1/16 of it."""
+    if (x_order is not None and rest.shape[0] * 16 >= x.shape[0]
+            and (rest[1:] > rest[:-1]).all()):
+        member = np.zeros(x.shape[0], dtype=bool)
+        member[rest] = True
+        return x_order[member[x_order]]
+    return rest[np.argsort(x[rest], kind="stable")]
+
+
 def split_numericx_numericy(ix: np.ndarray, x: np.ndarray, y: np.ndarray,
-                            sd_y: float, min_size: int, take_mid: bool) -> SplitResult:
+                            sd_y: float, min_size: int, take_mid: bool,
+                            x_order: np.ndarray | None) -> SplitResult:
     """S1 (src/split.cpp:252-333): sort by x, scan all distinct-x boundaries."""
     res = SplitResult()
     tot = ix.shape[0]
@@ -62,8 +79,7 @@ def split_numericx_numericy(ix: np.ndarray, x: np.ndarray, y: np.ndarray,
     n = rest.shape[0]
     if na_ix.shape[0] > 0 and n < 2 * min_size:
         return res
-    order = np.argsort(x[rest], kind="stable")
-    rest = rest[order]
+    rest = _sorted_by_x(rest, x, x_order)
     xs = x[rest]
     if n == 0 or xs[0] == xs[-1]:
         res.has_zero_variance = True
@@ -186,7 +202,8 @@ def split_categx_numericy(ix: np.ndarray, codes: np.ndarray, y: np.ndarray,
 
 def split_numericx_categy(ix: np.ndarray, x: np.ndarray, ycodes: np.ndarray,
                           ncat_y: int, base_info: float, min_size: int,
-                          take_mid: bool) -> SplitResult:
+                          take_mid: bool,
+                          x_order: np.ndarray | None) -> SplitResult:
     """S3 (src/split.cpp:569-639): sort by x, cumulative per-category counts."""
     res = SplitResult()
     tot = ix.shape[0]
@@ -199,8 +216,7 @@ def split_numericx_categy(ix: np.ndarray, x: np.ndarray, ycodes: np.ndarray,
     n = rest.shape[0]
     if na_ix.shape[0] > 0 and n < 2 * min_size:
         return res
-    order = np.argsort(x[rest], kind="stable")
-    rest = rest[order]
+    rest = _sorted_by_x(rest, x, x_order)
     xs = x[rest]
     if n == 0 or xs[0] == xs[-1]:
         res.has_zero_variance = True
@@ -209,26 +225,28 @@ def split_numericx_categy(ix: np.ndarray, x: np.ndarray, ycodes: np.ndarray,
 
     info_na = total_info(np.bincount(ycodes[na_ix], minlength=ncat_y)) if na_ix.shape[0] else 0.0
 
-    onehot = np.zeros((n, ncat_y), dtype=np.int64)
-    onehot[np.arange(n), yv] = 1
-    cum = np.cumsum(onehot, axis=0)          # left-branch counts after cut i
-    tot_counts = cum[-1]
-
     i = np.arange(n - 1)
     valid = (i + 1 >= min_size) & (n - 1 - i >= min_size) & (xs[:-1] != xs[1:])
     if not valid.any():
         return res
     cand = i[valid]
-    left = cum[cand].astype(LD)
-    right = (tot_counts - cum[cand]).astype(LD)
+    # per-category counts of the left branch after each candidate cut
+    # (one running count per category) and of the right branch
+    left = np.empty((cand.shape[0], ncat_y), dtype=np.int64)
+    for c in range(ncat_y):
+        left[:, c] = np.cumsum(yv == c)[cand]
+    right = np.bincount(yv, minlength=ncat_y) - left
 
-    def info_rows(m):
-        with np.errstate(divide="ignore", invalid="ignore"):
-            term = np.where(m > 0, m * np.log(np.maximum(m, 1)), 0)
-        t = m.sum(axis=1)
-        return np.where(t > 0, t * np.log(np.maximum(t, 1)) - term.sum(axis=1), 0)
+    # m*log(m) for every count 0..n, in longdouble, looked up instead of
+    # taking a log per cut and category: each looked-up element is the
+    # product the per-cut log gave, summed in the same order.  A branch's
+    # counts add up to its size: cand + 1 rows on the left, the rest right.
+    k = np.arange(n + 1, dtype=LD)
+    mlogm = k * np.log(np.maximum(k, 1))
+    info_left = mlogm[cand + 1] - mlogm[left].sum(axis=1)
+    info_right = mlogm[n - 1 - cand] - mlogm[right].sum(axis=1)
 
-    gains = ((LD(base_info) - info_rows(left) - info_rows(right) - LD(info_na))
+    gains = ((LD(base_info) - info_left - info_right - LD(info_na))
              / LD(tot)).astype(np.float64)
     best = int(np.argmax(gains))
     res.gain = float(gains[best])

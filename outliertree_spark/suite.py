@@ -48,9 +48,10 @@ class ValidationSuite:
         nm = name or f"unique_{key_col}"
 
         def fn(df: DataFrame) -> DataFrame:
+            # no broadcast hint: the duplicate-key set has no size bound,
+            # so AQE picks the semi-join strategy from runtime sizes
             dups = C.uniqueness_violations(df, key_col)
-            return (df.join(F.broadcast(dups.select(key_col)), key_col,
-                            "left_semi")
+            return (df.join(dups.select(key_col), key_col, "left_semi")
                     .withColumn("_check_value", F.col(key_col).cast("string")))
 
         self._checks.append(_Check(nm, "uniqueness", fn))

@@ -182,3 +182,169 @@ def test_model_json_roundtrip():
     res = predict_batch(m2, {"numeric_col1": np.array([-1e6]),
                              "categ_col": np.array([0])})
     assert res.score[0] < 1.0
+
+
+def _split_numericx_categy_reference(ix, x, ycodes, ncat_y, base_info,
+                                     min_size, take_mid):
+    """split_numericx_categy as it was before its m*log(m) table: a
+    longdouble log per candidate cut and category over a one-hot cumsum."""
+    from outliertree_spark.functions.stats import LD, total_info
+    from outliertree_spark.operators.split import SplitResult
+
+    res = SplitResult()
+    tot = ix.shape[0]
+    if tot < 2 * min_size:
+        return res
+    xv = x[ix]
+    na_mask = np.isnan(xv)
+    na_ix = ix[na_mask]
+    rest = ix[~na_mask]
+    n = rest.shape[0]
+    if na_ix.shape[0] > 0 and n < 2 * min_size:
+        return res
+    rest = rest[np.argsort(x[rest], kind="stable")]
+    xs = x[rest]
+    if n == 0 or xs[0] == xs[-1]:
+        res.has_zero_variance = True
+        return res
+    yv = ycodes[rest]
+    info_na = (total_info(np.bincount(ycodes[na_ix], minlength=ncat_y))
+               if na_ix.shape[0] else 0.0)
+    onehot = np.zeros((n, ncat_y), dtype=np.int64)
+    onehot[np.arange(n), yv] = 1
+    cum = np.cumsum(onehot, axis=0)
+    i = np.arange(n - 1)
+    valid = (i + 1 >= min_size) & (n - 1 - i >= min_size) & (xs[:-1] != xs[1:])
+    if not valid.any():
+        return res
+    cand = i[valid]
+    left = cum[cand].astype(LD)
+    right = (cum[-1] - cum[cand]).astype(LD)
+
+    def info_rows(m):
+        with np.errstate(divide="ignore", invalid="ignore"):
+            term = np.where(m > 0, m * np.log(np.maximum(m, 1)), 0)
+        t = m.sum(axis=1)
+        return np.where(t > 0, t * np.log(np.maximum(t, 1)) - term.sum(axis=1), 0)
+
+    gains = ((LD(base_info) - info_rows(left) - info_rows(right) - LD(info_na))
+             / LD(tot)).astype(np.float64)
+    best = int(np.argmax(gains))
+    res.gain = float(gains[best])
+    b = int(cand[best])
+    res.split_point = float(0.5 * (xs[b] + xs[b + 1])) if take_mid else float(xs[b])
+    res.na_ix, res.left_ix, res.right_ix = na_ix, rest[:b + 1], rest[b + 1:]
+    return res
+
+
+def test_split_numericx_categy_matches_per_cut_log_reference():
+    from outliertree_spark.functions.stats import total_info
+    from outliertree_spark.operators.split import (
+        split_numericx_categy,
+        split_numericx_numericy,
+    )
+
+    def bits(v):
+        return np.float64(v).tobytes()
+
+    rng = np.random.RandomState(7)
+    n_rows, min_size = 4000, 50
+    found = 0
+    for case in range(40):
+        ncat_y = [2, 3, 5, 9, 20][case % 5]
+        # some categories never occur (zero counts)
+        used = rng.choice(ncat_y, size=max(1, ncat_y - case % 3), replace=False)
+        ycodes = used[rng.randint(0, used.shape[0], size=n_rows)].astype(np.int64)
+        x = rng.normal(size=n_rows)
+        if case % 2:
+            x = np.round(x * 3)          # heavy ties
+        x[rng.rand(n_rows) < 0.05 * (case % 4)] = np.nan
+        size = [2 * min_size, 2 * min_size + 1, 400, n_rows][case % 4]
+        ix = np.sort(rng.choice(n_rows, size=size, replace=False))
+        if case % 7 == 3:
+            ix = rng.permutation(ix)     # rows not in index order
+        base_info = total_info(np.bincount(ycodes[ix], minlength=ncat_y))
+        # the shared sort order is used for the larger index-ordered ix
+        # and ignored for the others; both must give the argsort result
+        x_order = np.argsort(x, kind="stable")
+        y_num = rng.normal(size=n_rows)
+        for take_mid in (True, False):
+            ref = _split_numericx_categy_reference(ix, x, ycodes, ncat_y,
+                                                   base_info, min_size, take_mid)
+            pairs = [(split_numericx_categy(ix, x, ycodes, ncat_y, base_info,
+                                            min_size, take_mid, xo), ref)
+                     for xo in (None, x_order)]
+            pairs.append((split_numericx_numericy(ix, x, y_num, 1.0, min_size,
+                                                  take_mid, x_order),
+                          split_numericx_numericy(ix, x, y_num, 1.0, min_size,
+                                                  take_mid, None)))
+            for new, old in pairs:
+                assert bits(new.gain) == bits(old.gain), case
+                assert bits(new.split_point) == bits(old.split_point), case
+                assert new.has_zero_variance == old.has_zero_variance
+                for a, b in ((new.na_ix, old.na_ix), (new.left_ix, old.left_ix),
+                             (new.right_ix, old.right_ix)):
+                    assert (a is None) == (b is None)
+                    if a is not None:
+                        np.testing.assert_array_equal(a, b)
+            found += np.isfinite(ref.gain)
+    assert found >= 40   # most cases reach the gain computation
+
+
+def _stale_flag_frame(seed=0, n=2000):
+    rng = np.random.RandomState(seed)
+    grp = rng.randint(0, 3, size=n)
+    color = rng.randint(0, 4, size=n)
+    size = rng.randint(0, 3, size=n)
+    a = rng.normal(size=n) + 5.0 * size
+    b = rng.normal(size=n) * (1 + color) + 3 * grp
+    # outliers in a's last branch cluster (size > m) leave has_outliers
+    # True when a's fit ends, so b starts from the stale flag
+    a[np.flatnonzero(size == 2)[:2]] += 40.0
+    b[rng.choice(n, 3, replace=False)] -= 60.0
+    a[rng.choice(n, 20, replace=False)] = np.nan
+    # one row each of a rare level, so every target gets a root cluster
+    grp[11], color[12], size[13] = 3, 4, 3
+    return [
+        FitColumn("a", "numeric", a),
+        FitColumn("grp", "categorical", grp.astype(np.int64),
+                  levels=["g0", "g1", "g2", "g3"]),
+        FitColumn("b", "numeric", b),
+        FitColumn("color", "categorical", color.astype(np.int64),
+                  levels=["r", "g", "b", "y", "p"]),
+        FitColumn("size", "ordinal", size.astype(np.int64),
+                  levels=["s", "m", "l", "xl"]),
+    ]
+
+
+def test_parallel_fit_equals_one_worker(monkeypatch):
+    import os
+
+    from outliertree_spark.model import model_to_json
+    from outliertree_spark.operators import fit as fit_mod
+
+    stale_at_start = {}
+    fit_numeric = fit_mod._ColumnFit.fit_numeric
+
+    def recording_fit_numeric(self):
+        stale_at_start[self.target.name] = self.has_outliers
+        return fit_numeric(self)
+
+    monkeypatch.setattr(fit_mod._ColumnFit, "fit_numeric", recording_fit_numeric)
+    cfg = ValidationConfig(max_depth=1)
+    pooled = fit_arrays(_stale_flag_frame(), cfg)
+    assert stale_at_start == {"a": False, "b": True}
+
+    stale_at_start.clear()
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0})
+    single = fit_arrays(_stale_flag_frame(), cfg)
+    assert stale_at_start == {"a": False, "b": True}
+
+    assert [c["name"] for c in pooled["columns"]] == ["a", "b", "grp", "color", "size"]
+    tr_pooled, tr_single = pooled.pop("_train_rows"), single.pop("_train_rows")
+    assert model_to_json(pooled) == model_to_json(single)
+    assert sorted(tr_pooled) == sorted(tr_single)
+    for k in tr_pooled:
+        assert tr_pooled[k].dtype == tr_single[k].dtype
+        np.testing.assert_array_equal(tr_pooled[k], tr_single[k])
+    assert (tr_pooled["scores"] < 1.0).sum() > 0
